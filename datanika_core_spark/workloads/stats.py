@@ -3212,7 +3212,8 @@ def uplift_qini_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the portable md5 hash shared with every abtest workload.
 
     Determinism: all counts are exact BIGINTs; the decile NTILE has
-    a user_id tiebreak; each reported figure divides once. Scale:
+    a user_id tiebreak; each reported figure divides once, and a zero
+    denominator gives NULL (try_divide, the oracle's semantics). Scale:
     one groupBy(user) (the sessionization shuffle) + an exact decile
     rank (at 100 TB: approx-quantile boundaries + map-only binning,
     cf. eval_decile_lift) + a 10-row windowed rollup."""
@@ -3260,17 +3261,19 @@ def uplift_qini_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("conv_t").over(wc).alias("cct"),
         F.sum("conv_c").over(wc).alias("ccc"),
     )
+    # a decile (or running prefix) with no treated / no control users
+    # has no rate: NULL, as the oracle's division gives, not an ANSI
+    # DIVIDE_BY_ZERO (small inputs leave such deciles)
+    rate_t = F.try_divide(F.col("conv_t") * 1.0, F.col("n_t"))
+    rate_c = F.try_divide(F.col("conv_c") * 1.0, F.col("n_c"))
     return cum.select(
         "decile", "n_t", "n_c",
-        F.round(F.col("conv_t") * 1.0 / F.col("n_t"), 6).alias("rate_t"),
-        F.round(F.col("conv_c") * 1.0 / F.col("n_c"), 6).alias("rate_c"),
+        F.round(rate_t, 6).alias("rate_t"),
+        F.round(rate_c, 6).alias("rate_c"),
+        F.round(rate_t - rate_c, 6).alias("uplift"),
         F.round(
-            F.col("conv_t") * 1.0 / F.col("n_t")
-            - F.col("conv_c") * 1.0 / F.col("n_c"),
-            6,
-        ).alias("uplift"),
-        F.round(
-            F.col("cct") - F.col("ccc") * 1.0 * F.col("cnt") / F.col("cnc"),
+            F.col("cct")
+            - F.try_divide(F.col("ccc") * 1.0 * F.col("cnt"), F.col("cnc")),
             4,
         ).alias("qini"),
     ).orderBy("decile")

@@ -3,6 +3,10 @@ entry() at sf0.001 and then runs every queries() entry at sf0.01 in
 the SAME session — workloads that register temp views or stage
 catalog tables must not leak state between scale factors."""
 
+import os
+
+import pytest
+
 import __spark_entry__ as entry_mod
 
 
@@ -215,3 +219,29 @@ def test_recorded_names_returns_latest_passing_round():
             continue
         if name in rec:
             assert rec[name] == max_round
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_uplift_qini_matches_oracle_with_empty_deciles(spark, sf_dir, sf):
+    """At sf0.001 some activity deciles hold no treated or no control
+    user: their rates (and a running Qini over an empty control
+    prefix) are NULL, as in the oracle, not an ANSI DIVIDE_BY_ZERO."""
+    import duckdb
+
+    from datanika_core_spark.workloads import load_all
+    from tools.check_correctness import _norm_rows
+
+    sf_dir = os.path.join(os.path.dirname(sf_dir), sf)
+    wl = load_all()["uplift_qini_by_decile"]
+    sdf = wl.fn(spark, sf_dir)
+    got = _norm_rows(sdf.columns, [tuple(r) for r in sdf.collect()])
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet'")
+    cur = con.execute(wl.oracle)
+    cols = [d[0] for d in cur.description]
+    want = _norm_rows(cols, cur.fetchall())
+    con.close()
+    assert sorted(sdf.columns) == sorted(cols)
+    assert got == want
+    if sf == "sf0.001":
+        assert any(r.rate_t is None or r.rate_c is None for r in sdf.collect())

@@ -1500,28 +1500,15 @@ def test_r12_clique_construction_executes_zero_jobs(spark):
     reg = load_all()
 
     def compute_jobs(group: str, build) -> list[int]:
-        """Job ids in `group`, excluding parquet footer/schema
-        inference ("parquet at ..." single-task jobs) — session
-        housekeeping Spark may or may not run on a read, not
-        workload compute."""
+        """Every job id in `group` — reads run none (read_table takes
+        its schema from the parquet footer, no inference job), so
+        any job here is workload compute."""
         sc.setJobGroup(group, "probe")
         try:
             build()
-            ids = list(sc.statusTracker().getJobIdsForGroup(group))
+            return list(sc.statusTracker().getJobIdsForGroup(group))
         finally:
             sc.setJobGroup(None, None)
-        st = sc.statusTracker()
-        real = []
-        for j in ids:
-            info = st.getJobInfo(j)
-            names = [
-                (st.getStageInfo(s).name if st.getStageInfo(s) else "")
-                for s in list(info.stageIds)
-            ]
-            if all(nm.startswith("parquet at") for nm in names):
-                continue
-            real.append(j)
-        return real
 
     assert compute_jobs(
         "census-construction-probe",

@@ -5,14 +5,30 @@ CartesianProduct / SortMergeJoin-of-tiny-sides cover the whole
 registry, not just the bench set).
 
 Usage: python tools/plan_signals_all.py [sf_dir] > docs/PLANS_ALL.md
+
+Plan-diff mode — the mechanical "no behaviour change" proof: dump every
+workload's optimized and physical plan text (AQE off, ids normalized)
+from one checkout, dump again from another, and compare:
+
+    python tools/plan_signals_all.py --dump before.json SF_DIR
+    python tools/plan_signals_all.py --dump after.json SF_DIR
+    python tools/plan_signals_all.py --diff before.json after.json
+
+Dump at the smallest scale (sf0.001): plans do not depend on it and it
+builds fastest. ``--diff`` prints each differing workload with a
+unified diff and exits 1 if any differs.
 """
 
 from __future__ import annotations
 
 import contextlib
+import difflib
 import io
+import json
 import re
+import shutil
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -79,8 +95,71 @@ def unbounded_global_windows(df) -> int:
     return count
 
 
+#: per-session counters in plan text: expression ids (``col#12L``),
+#: lambda variables (``x_3``), plan / relation ids and observation
+#: (CollectMetrics) uuids
+_PLAN_IDS = [
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"\bx_\d+"), "x_N"),
+    (re.compile(r"\b(plan_id|id)=\d+"), r"\1=N"),
+    (re.compile(r"\b[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}\b"), "<uuid>"),
+]
+
+
+def normalized_plans(df, warehouse: str) -> str:
+    """Optimized + physical plan text of ``df`` (no job runs), with
+    the per-session ids of :data:`_PLAN_IDS` and the session's
+    warehouse path normalized away. Expression eval modes (e.g.
+    ``try_divide`` vs ``/``) do not appear in plan text."""
+    qe = df._jdf.queryExecution()
+    text = (f"== Optimized ==\n{qe.optimizedPlan().toString()}\n"
+            f"== Physical ==\n{qe.executedPlan().toString()}")
+    text = text.replace(warehouse, "<warehouse>")
+    for pat, repl in _PLAN_IDS:
+        text = pat.sub(repl, text)
+    return text
+
+
+def dump_plans(out: str, sf_dir: str) -> int:
+    from datanika_core_spark.blocks import release_blocks
+
+    warehouse = tempfile.mkdtemp(prefix="plan_dump_wh_")
+    spark = build_spark(app_name="plan_dump", warehouse_dir=warehouse)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    plans = {}
+    for name, wl in sorted(load_all().items()):
+        try:
+            plans[name] = normalized_plans(wl.fn(spark, sf_dir), warehouse)
+        except Exception as e:  # recorded, so a diff shows it too
+            plans[name] = f"ERROR {type(e).__name__}"
+        release_blocks(spark)
+    spark.stop()
+    shutil.rmtree(warehouse, ignore_errors=True)
+    Path(out).write_text(json.dumps(plans, indent=0, sort_keys=True))
+    print(f"{len(plans)} plans -> {out}")
+    return 0
+
+
+def diff_plans(a_path: str, b_path: str) -> int:
+    a = json.loads(Path(a_path).read_text())
+    b = json.loads(Path(b_path).read_text())
+    differ = sorted(n for n in a.keys() | b.keys() if a.get(n) != b.get(n))
+    for n in differ:
+        print(f"## {n}")
+        sys.stdout.writelines(difflib.unified_diff(
+            (a.get(n) or "").splitlines(True), (b.get(n) or "").splitlines(True),
+            a_path, b_path, n=1))
+        print()
+    print(f"{len(differ)} of {len(a.keys() | b.keys())} workloads differ")
+    return 1 if differ else 0
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    if sys.argv[1:2] == ["--dump"]:
+        return dump_plans(sys.argv[2], sys.argv[3])
+    if sys.argv[1:2] == ["--diff"]:
+        return diff_plans(sys.argv[2], sys.argv[3])
     spark = build_spark(app_name="plan_signals_all")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     print("# Plan signals — all workloads\n")
